@@ -2,6 +2,7 @@ package graft.etl
 
 import java.nio.file.{Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The reference's full ETL (analyzer.rs:203-352) as a Spark job:
@@ -10,7 +11,9 @@ import org.apache.spark.sql.functions._
   * over the repo work-list — the executor-boundary analog of one tokio
   * task per repo, analyzer.rs:222-230) → DataFrame normalization
   * (author-map broadcast lookup, URL rewrite, explode) → three parquet
-  * tables.
+  * tables. The same dataflow serves full, sharded and incremental runs:
+  * [[GitEtlIncr]] passes the previous run's state and keeps only the
+  * exactly-once append.
   *
   * Deviations from the reference, by design (SURVEY.md §7.3):
   *  - surrogate keys are deterministic (dense_rank over (name, path)),
@@ -31,7 +34,8 @@ object GitEtl {
       failed: Map[String, String],
       nLogs: Long,
       nChangedFiles: Long,
-      commitsPerRepo: Seq[(String, Long)] = Nil)
+      commitsPerRepo: Seq[(String, Long)] = Nil,
+      modes: Map[String, String] = Map.empty) // repo path -> full|since|noop|rewind
 
   /** Run the ETL. Tables land as parquet under `outDir`:
     * repositories(repo_id, name, url), logs(commit_hash, parent_hash,
@@ -67,17 +71,26 @@ object GitEtl {
   /** Build the output DataFrames without writing. Triggers NO Spark
     * jobs — callers that want the run report call [[report]] (which
     * does), and should unpersist the "events" entry when finished.
+    *
+    * `previous` is an earlier run's state, repo path → (repo_id, head)
+    * ([[GitEtlIncr]]'s frontier; empty on a full run). Each repo then
+    * walks only the commits after its recorded head
+    * ([[GitLogSource.extractRepo]]'s `since`), kept repos keep their ids
+    * and new repos take ids after the previous maximum. The "state"
+    * entry is the next run's frontier.
     */
   def dataframes(
       spark: SparkSession,
       root: Path,
       config: EtlConfig,
       maxDepth: Int,
-      shardsPerRepo: Int = 1): Map[String, DataFrame] = {
+      shardsPerRepo: Int = 1,
+      previous: Map[String, (Long, String)] = Map.empty): Map[String, DataFrame] = {
     import spark.implicits._
 
     val (candidates, ignored) = GitLogSource.scanDirectories(root, maxDepth, config.ignoredRepositories)
     val nShards = math.max(1, shardsPerRepo)
+    val heads = previous.collect { case (p, (_, h)) if h != null => p -> h }
 
     // One task per repository (the reference's task-per-repo fanout,
     // analyzer.rs:222-230), with ALL per-repo subprocess work —
@@ -91,8 +104,8 @@ object GitEtl {
     // hazard.
     //
     // Persisted: the one extraction pass feeds the repositories dim,
-    // logs, changed_files, AND the failure report — without caching,
-    // every downstream action would re-run `git log` over every repo.
+    // logs, changed_files, AND the report — without caching, every
+    // downstream action would re-run `git log` over every repo.
     // shardsPerRepo > 1 spreads each history over several tasks (hash-
     // sliced via rev-list + log --stdin) — the giant-repo straggler
     // mitigation; shard 0 carries the repo/error events.
@@ -101,7 +114,7 @@ object GitEtl {
       .createDataset(work)
       .repartition(math.max(1, work.size))
       .mapPartitions(_.flatMap { case (p, sh) =>
-        GitLogSource.extractRepoShard(Paths.get(p), sh, nShards)
+        GitLogSource.extractRepo(Paths.get(p), heads.get(p), sh, nShards)
       })
       .toDF()
       .persist()
@@ -117,40 +130,30 @@ object GitEtl {
     // the same directory basename (root/team1/app, root/team2/app) are
     // distinct repositories and must not merge or duplicate; `name` in
     // the output stays the basename for reference parity.
-    val repoWindow = org.apache.spark.sql.expressions.Window.orderBy("name", "path")
-    val repoDim = events.filter(col("kind") === "repo")
-      .select(col("repo_name").as("name"), col("repo_path").as("path"), col("repo_url").as("url"))
-      .withColumn("repo_id", dense_rank().over(repoWindow).cast("long"))
+    val repoEvents = events.filter(col("kind") === "repo")
+      .select(col("repo_name").as("name"), col("repo_path").as("path"),
+        col("repo_url").as("url"), col("head"))
+    val repoDim =
+      if (previous.isEmpty)
+        repoEvents.withColumn("repo_id", dense_rank().over(Window.orderBy("name", "path")).cast("long"))
+      else {
+        // ids are STABLE across incremental runs (a full rebuild
+        // renumbers by rank, an incremental deployment must not): new
+        // repos sort first, so their ranks are 1..n after the previous
+        // maximum; kept repos take their previous id
+        val ids = previous.toSeq.map { case (p, (id, _)) => (p, id) }.toDF("p_path", "p_id")
+        val maxId = previous.values.map(_._1).max
+        repoEvents.join(broadcast(ids), col("path") === col("p_path"), "left")
+          .withColumn("repo_id", coalesce(col("p_id"), lit(maxId) +
+            dense_rank().over(Window.orderBy(col("p_id").isNotNull, col("name"), col("path")))))
+          .drop("p_path", "p_id")
+      }
 
-    val repositories = repoDim.select("repo_id", "name", "url")
-
-    val (logs, changedFiles) = normalizedTables(events, repoDim, config.authorMap)
-
-    val failures = events.filter(col("kind") === "error")
-      .select(col("repo_path").as("path"), col("error"))
-
-    Map(
-      "repositories" -> repositories,
-      "logs" -> logs,
-      "changed_files" -> changedFiles,
-      "failures" -> failures,
-      "ignored" -> ignored.toDF("name"),
-      "events" -> events)
-  }
-
-  /** The commit-normalization tail shared by the full-history path
-    * above and the incremental path ([[GitEtlIncr]]): author-map
-    * override + repo-id attach + per-file explode over any extraction
-    * event frame and any (repo_id, path) dimension.
-    */
-  private[etl] def normalizedTables(
-      events: DataFrame, repoDim: DataFrame,
-      authorMap: Map[String, String]): (DataFrame, DataFrame) = {
     // Author normalization (J1): broadcast the email→name map and
     // override the *name* only (repository.rs:167-171). A literal
     // MapType rides inside codegen — zero shuffle, like the
     // reference's in-process HashMap.
-    val authorMapCol = typedLit(authorMap)
+    val authorMapCol = typedLit(config.authorMap)
     val logsRaw = events.filter(col("kind") === "commit")
       .select(col("commit.*"))
       .withColumn("author_name",
@@ -176,34 +179,52 @@ object GitEtl {
       .join(broadcast(dim), logsRaw("repo_path") === dim("path"))
       .select(col("commit_hash"), explode(col("changed_files")).as("file_path"),
         col("repo_id").as("repository_id"))
-    (logs, changedFiles)
+
+    Map(
+      "repositories" -> repoDim.select("repo_id", "name", "url"),
+      "logs" -> logs,
+      "changed_files" -> changedFiles,
+      "state" -> repoDim.select("repo_id", "name", "path", "url", "head"),
+      "ignored" -> ignored.toDF("name"),
+      "events" -> events)
   }
 
-  /** Materialize the run report from [[dataframes]] output — the one
-    * place that triggers jobs (four small actions over the cached
-    * extraction; `dataframes` itself stays lazy).
+  /** Materialize the run report from [[dataframes]] output — ONE Spark
+    * job over the cached extraction (`dataframes` itself stays lazy):
+    * each task counts its events per (kind, repo, error, mode) and the
+    * driver merges the counts — a groupBy would add a shuffle-map job.
+    * There are O(repos) groups. Per-repo commit counts are the
+    * reference's per-repo progress lines, rendered post-hoc; zero-commit
+    * repos report n = 0.
     */
   def report(tables: Map[String, DataFrame]): EtlReport = {
-    import org.apache.spark.sql.Row
-    // per-repo commit counts from the cached extraction (the
-    // reference's per-repo progress lines, rendered post-hoc); right
-    // join keeps zero-commit repos with n = 0
-    val perRepo = tables("logs")
-      .groupBy("repository_id").agg(count(lit(1)).as("n"))
-      .join(tables("repositories"),
-        col("repository_id") === col("repo_id"), "right")
-      .select(col("name"), coalesce(col("n"), lit(0L)).as("n"), col("repo_id"))
-      .collect()
-      .sortBy(r => (r.getString(0), r.getAs[Long]("repo_id")))
-      .map(r => r.getString(0) -> r.getAs[Long]("n")).toSeq
+    def add(m: Map[ReportGroup, (Long, Long)], g: ReportGroup, nf: (Long, Long)) = {
+      val (n, f) = m.getOrElse(g, (0L, 0L))
+      m.updated(g, (n + nf._1, f + nf._2))
+    }
+    val groups = tables("events")
+      .select(col("kind"), col("repo_name"), col("repo_path"), col("error"), col("mode"),
+        when(col("kind") === "commit", size(col("commit.changed_files"))).otherwise(0))
+      .rdd
+      .aggregate(Map.empty[ReportGroup, (Long, Long)])(
+        (m, r) => add(m, ReportGroup(r.getString(0), r.getString(1), r.getString(2),
+          r.getString(3), r.getString(4)), (1L, r.getInt(5).toLong)),
+        (a, b) => b.foldLeft(a)((m, kv) => add(m, kv._1, kv._2)))
+    val repos = groups.keys.filter(_.kind == "repo").toSeq.sortBy(g => (g.name, g.path))
+    val commits = groups.collect { case (g, nf) if g.kind == "commit" => g.path -> nf }
     EtlReport(
-      analyzed = tables("repositories").select("name")
-        .collect().map(_.getString(0)).toSeq.sorted,
+      analyzed = repos.map(_.name),
       ignored = tables("ignored").collect().map(_.getString(0)).toSeq,
-      failed = tables("failures")
-        .collect().map { case Row(p: String, e: String) => p -> e }.toMap,
-      nLogs = tables("logs").count(),
-      nChangedFiles = tables("changed_files").count(),
-      commitsPerRepo = perRepo)
+      failed = groups.keys.collect { case g if g.kind == "error" => g.path -> g.error }.toMap,
+      nLogs = commits.values.map(_._1).sum,
+      nChangedFiles = commits.values.map(_._2).sum,
+      commitsPerRepo = repos.map(g => g.name -> commits.get(g.path).fold(0L)(_._1)),
+      modes = repos.map(g => g.path -> g.mode).toMap)
   }
+
+  /** The events of one kind for one repo — (commit count, changed-file
+    * count) is aggregated per group; `error` / `mode` are set on error /
+    * repo events. */
+  private final case class ReportGroup(
+      kind: String, name: String, path: String, error: String, mode: String)
 }

@@ -1,8 +1,7 @@
 package graft.etl
 
-import java.nio.file.{Path, Paths}
+import java.nio.file.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.sources.Sinks
 
 /** Incremental (since-snapshot) git ETL — the one ETL capability the
@@ -13,10 +12,13 @@ import graft.sources.Sinks
   * cost that matters is O(new commits), not O(total history).
   *
   * Mechanics: each run records every repo's HEAD in a `state`
-  * snapshot table; the next run reads that frontier and extracts only
-  * `old-head..HEAD` per repo ([[GitLogSource.extractRepoSince]] — a
-  * repo whose head is unchanged launches NO `git log` at all).
-  * Batches land through the snapshot-versioned manifest-log tables
+  * snapshot table; the next run hands that frontier to
+  * [[GitEtl.dataframes]], whose per-repo extraction
+  * ([[GitLogSource.extractRepo]] with `since`) walks only
+  * `old-head..HEAD` — a repo whose head is unchanged launches NO
+  * `git log` at all. What stays here is only the incremental part:
+  * read the state and the committed keys, dedupe, commit. Batches land
+  * through the snapshot-versioned manifest-log tables
   * ([[Sinks.writeSnapshot]] append mode), so:
   *
   *  - readers always see a complete committed version, never a
@@ -61,88 +63,35 @@ object GitEtlIncr {
       root: Path,
       dir: String,
       config: EtlConfig = EtlConfig(),
-      maxDepth: Int = 1): IncrReport = {
-    import spark.implicits._
-
-    val (candidates, _) =
-      GitLogSource.scanDirectories(root, maxDepth, config.ignoredRepositories)
-
-    val prevState: Option[DataFrame] =
-      if (Sinks.snapshotVersions(s"$dir/state").nonEmpty)
-        Some(Sinks.readSnapshot(spark, s"$dir/state"))
-      else None
+      maxDepth: Int = 1,
+      shardsPerRepo: Int = 1): IncrReport = {
     // the frontier is O(repos) — the same order as the driver-side
     // work-list itself, so a collected map (broadcast inside the task
     // closure) is the right transport
-    val prevHeads: Map[String, String] = prevState
-      .map(_.select("path", "head").collect()
-        .flatMap(r => Option(r.getString(1)).map(r.getString(0) -> _)).toMap)
-      .getOrElse(Map.empty)
+    val previous: Map[String, (Long, String)] =
+      if (Sinks.snapshotVersions(s"$dir/state").isEmpty) Map.empty
+      else Sinks.readSnapshot(spark, s"$dir/state").select("path", "repo_id", "head").collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getString(2))).toMap
+    val tables = GitEtl.dataframes(spark, root, config, maxDepth, shardsPerRepo, previous)
 
-    val work = candidates.map(_.toString)
-    val events = spark.createDataset(work)
-      .repartition(math.max(1, work.size))
-      .mapPartitions(_.flatMap(p =>
-        GitLogSource.extractRepoSince(Paths.get(p), prevHeads.get(p))))
-      .toDF()
-      .persist()
-
-    // --- repositories dimension with STABLE ids ---
-    val repoEvents = events.filter(col("kind") === "repo")
-      .select(col("repo_name").as("name"), col("repo_path").as("path"),
-        col("repo_url").as("url"), col("head"), col("mode"))
-    val (kept, fresh, maxPrevId) = prevState match {
-      case Some(st) =>
-        val ids = st.select(col("path").as("p_path"), col("repo_id").as("p_id"))
-        val joined = repoEvents
-          .join(broadcast(ids), col("path") === col("p_path"), "left")
-          .drop("p_path")
-        val mx = st.agg(max("repo_id")).collect()(0).getLong(0)
-        (joined.filter(col("p_id").isNotNull),
-          joined.filter(col("p_id").isNull), mx)
-      case None =>
-        (repoEvents.withColumn("p_id", lit(null).cast("long")).limit(0),
-          repoEvents.withColumn("p_id", lit(null).cast("long")), 0L)
-    }
-    // new repos rank AFTER the previous maximum — the global window
-    // runs over the new-repo slice only (bounded by the work-list,
-    // which is already driver-sized; same stance as GitEtl's repoDim)
-    val freshW = org.apache.spark.sql.expressions.Window.orderBy("name", "path")
-    val repoDim = kept.withColumn("repo_id", col("p_id"))
-      .unionByName(fresh.withColumn("repo_id",
-        lit(maxPrevId) + dense_rank().over(freshW).cast("long")))
-      .select("repo_id", "name", "path", "url", "head", "mode")
-
-    // --- batch normalization + exactly-once append ---
-    val (logsAll, filesAll) =
-      GitEtl.normalizedTables(events, repoDim, config.authorMap)
+    // --- exactly-once append: drop commits already committed (the
+    // rewind/replay guard) ---
     val known: Option[DataFrame] =
-      if (Sinks.snapshotVersions(s"$dir/logs").nonEmpty)
-        Some(Sinks.readSnapshot(spark, s"$dir/logs")
-          .select("repository_id", "commit_hash"))
-      else None
-    def dedupe(df: DataFrame): DataFrame = known match {
-      // drops commits already committed: the rewind/replay guard
-      case Some(k) => df.join(k, Seq("repository_id", "commit_hash"), "left_anti")
-      case None    => df
-    }
-    val logsBatch = dedupe(logsAll)
-    val filesBatch = dedupe(filesAll)
+      if (Sinks.snapshotVersions(s"$dir/logs").isEmpty) None
+      else Some(Sinks.readSnapshot(spark, s"$dir/logs").select("repository_id", "commit_hash"))
+    def dedupe(df: DataFrame): DataFrame =
+      known.fold(df)(df.join(_, Seq("repository_id", "commit_hash"), "left_anti"))
+    val logsBatch = dedupe(tables("logs"))
+    val filesBatch = dedupe(tables("changed_files"))
 
     val logsV = Sinks.writeSnapshot(logsBatch, s"$dir/logs", overwrite = false)
     Sinks.writeSnapshot(filesBatch, s"$dir/changed_files", overwrite = false)
-    Sinks.writeSnapshot(repoDim.select("repo_id", "name", "url"),
-      s"$dir/repositories", overwrite = true)
-    Sinks.writeSnapshot(repoDim.select("repo_id", "name", "path", "url", "head"),
-      s"$dir/state", overwrite = true)
+    Sinks.writeSnapshot(tables("repositories"), s"$dir/repositories", overwrite = true)
+    Sinks.writeSnapshot(tables("state"), s"$dir/state", overwrite = true)
 
-    val modes = repoEvents.select("path", "mode").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val failed = events.filter(col("kind") === "error")
-      .select("repo_path", "error").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val rep = IncrReport(logsV, modes, logsBatch.count(), filesBatch.count(), failed)
-    events.unpersist()
-    rep
+    val rep = GitEtl.report(tables)
+    val out = IncrReport(logsV, rep.modes, logsBatch.count(), filesBatch.count(), rep.failed)
+    tables("events").unpersist()
+    out
   }
 }

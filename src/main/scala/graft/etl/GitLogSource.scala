@@ -1,10 +1,10 @@
 package graft.etl
 
-import java.io.{BufferedInputStream, ByteArrayOutputStream, File, InputStream}
+import java.io.{BufferedInputStream, BufferedReader, BufferedWriter, ByteArrayOutputStream,
+  FilterInputStream, IOException, InputStream, InputStreamReader, OutputStreamWriter}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
-import scala.sys.process._
 import scala.util.Try
 
 /** One extracted commit, pre-normalization (the analog of the
@@ -29,10 +29,13 @@ final case class CommitRow(
   * single distributed pass produce the repositories dimension, the
   * commit stream, AND the failure report:
   *
-  *  - kind="repo":   the path validated as a git repository (url set);
-  *    emitted even when the history yields zero non-merge commits, so
-  *    the repositories table includes empty/all-merge repos exactly as
-  *    the reference does (analyzer.rs:299-310);
+  *  - kind="repo":   the path validated as a git repository (url set,
+  *    plus the `head` walked to — the incremental ETL's next frontier —
+  *    and the walk's `mode`: full | since | noop | rewind, see
+  *    [[GitLogSource.extractRepo]]); emitted even when the history
+  *    yields zero non-merge commits, so the repositories table includes
+  *    empty/all-merge repos exactly as the reference does
+  *    (analyzer.rs:299-310);
   *  - kind="commit": one extracted commit (commit set);
   *  - kind="error":  validation failed (error set) — the reference's
   *    silent skip (analyzer.rs:351) surfaced as data.
@@ -44,10 +47,6 @@ final case class ExtractEvent(
     repo_url: String,
     error: String,
     commit: CommitRow,
-    // incremental-extraction metadata, set on kind="repo" events of the
-    // since-snapshot path only (GitEtlIncr): the repo's HEAD at
-    // extraction time (the next run's frontier) and how this run
-    // extracted it — full | since | noop | rewind
     head: String = null,
     mode: String = null)
 
@@ -131,9 +130,6 @@ object GitLogSource {
         finally st.close()
       }.getOrElse(Vector.empty) // unreadable dir -> skipped, not fatal
     }
-    def looksLikeRepo(p: Path): Boolean =
-      // .git may be a FILE (linked worktrees, submodule checkouts)
-      Files.exists(p.resolve(".git")) || isBareRepo(p)
     val cands = Vector.newBuilder[Path]
     val ign   = Vector.newBuilder[String]
     def walk(dir: Path, depth: Int): Unit =
@@ -141,7 +137,7 @@ object GitLogSource {
         val name = c.getFileName.toString
         if (name == ".git") ()                      // never descend into .git
         else if (ignored.contains(name)) ign += name // prune the subtree
-        else if (looksLikeRepo(c)) cands += c        // repo: never descend inside
+        else if (isRepo(c)) cands += c               // repo: never descend inside
         else {
           if (depth == 1) cands += c // reference parity: surfaces as skipped
           walk(c, depth + 1)
@@ -151,161 +147,93 @@ object GitLogSource {
     (cands.result().sortBy(_.toString), ign.result().sorted)
   }
 
-  private def isBareRepo(p: Path): Boolean =
-    Files.isRegularFile(p.resolve("HEAD")) && Files.isDirectory(p.resolve("objects"))
+  /** A checkout (`.git` may be a FILE: linked worktrees, submodule
+    * checkouts) or a bare repository. Checked before any git call: git
+    * itself would discover an ENCLOSING repository from a plain
+    * subdirectory and walk the wrong history.
+    */
+  private def isRepo(p: Path): Boolean =
+    Files.exists(p.resolve(".git")) ||
+      (Files.isRegularFile(p.resolve("HEAD")) && Files.isDirectory(p.resolve("objects")))
 
-  private def remoteUrl(dir: File): String = {
-    val raw = Try(
-      Process(Seq("git", "config", "--get", "remote.origin.url"), dir).!!.trim
-    ).toOption.filter(_.nonEmpty).getOrElse(NoRemoteUrl)
-    raw.replace("git@github.com:", "https://github.com/")
-  }
-
-  /** The one git-log command both extraction paths share.
+  /** The `git log` arguments every walk shares.
     *
     * `-z` NUL-separates commits and NUL-terminates every numstat path
     * (renames arrive as an empty path slot followed by two standalone
     * old/new path tokens — no " => " munging to disambiguate); `%x00`
-    * makes every header field its own NUL token. core.quotePath=false
-    * keeps non-ASCII paths raw (with -z git never quotes, but the
-    * config also covers the `git config` subprocess family).
+    * makes every header field its own NUL token.
     */
-  private def logCommand: Seq[String] = Seq(
-    "git", "-c", "diff.ignoreSubmodules=all", "-c", "core.quotePath=false", "log",
-    "-z", "--no-merges", "--date-order", "--numstat",
-    "--find-renames=100%", "--find-copies=100%",
+  private val LogArgs = Seq(
+    "-z", "--no-merges", "--numstat", "--find-renames=100%", "--find-copies=100%",
     "--pretty=format:%x01%H%x00%P%x00%an%x00%ae%x00%ct%x00%s")
 
-  /** Cheap repo validation for the report pass: confirms the path is a
-    * git repository with a resolvable HEAD without reading any history.
-    */
-  def validateRepo(path: Path): Option[String] = {
-    // .git may be a directory or a file (worktree/submodule checkouts)
-    if (!(Files.exists(path.resolve(".git")) || isBareRepo(path)))
-      Some(s"not a git repository: $path")
-    else {
-      val ok = Try(Process(Seq("git", "rev-parse", "--verify", "HEAD"), path.toFile).!!).isSuccess
-      if (ok) None else Some(s"cannot resolve HEAD in $path")
-    }
-  }
-
-  /** Stream one repository's commits WITHOUT materializing the whole
-    * history: the raw `git log -z` byte stream is consumed token by
-    * token through a lazy iterator, so executor memory per repo is
-    * O(one commit), not O(history) — the reference holds the entire
-    * repo in a Vec (repository.rs:114,185), which SURVEY.md §4 flags as
-    * its OOM risk at scale; this is the Spark-side fix.
+  /** Extract one repository as a lazy event stream — the one extraction
+    * entry point. The whole per-repo subprocess budget runs HERE, inside
+    * the executor task, so the driver's prep per repo is O(1) (a
+    * directory listing entry) even on a 100k-repo work-list: one
+    * `rev-parse` that both validates the repo and yields its head, one
+    * remote-url lookup, then the walk.
     *
-    * A nonzero git exit status becomes a LOUD exception at end of
-    * stream (raised from the consuming task) instead of silently
-    * truncating the repo's commits while the report lists it as
-    * analyzed.
-    */
-  def streamRepo(path: Path): Iterator[CommitRow] =
-    streamRepo(path, path.getFileName.toString, remoteUrl(path.toFile))
-
-  /** Validate + extract one repository as a lazy event stream — the
-    * whole per-repo subprocess budget (rev-parse validation, remote-url
-    * lookup, git log) runs HERE, inside the executor task, so the
-    * driver's prep per repo is O(1) (a directory listing entry) even on
-    * a 100k-repo work-list.
-    */
-  def extractRepo(path: Path): Iterator[ExtractEvent] = {
-    val name = path.getFileName.toString
-    validateRepo(path) match {
-      case Some(err) =>
-        Iterator.single(ExtractEvent("error", name, path.toString, null, err, null))
-      case None =>
-        val url = remoteUrl(path.toFile)
-        Iterator.single(ExtractEvent("repo", name, path.toString, url, null, null)) ++
-          streamRepo(path, name, url).map(c =>
-            ExtractEvent("commit", name, path.toString, url, null, c))
-    }
-  }
-
-  /** The repo's current HEAD hash, or None when unresolvable. */
-  def headHash(path: Path): Option[String] =
-    Try(Process(Seq("git", "rev-parse", "--verify", "HEAD"), path.toFile).!!.trim)
-      .toOption.filter(_.nonEmpty)
-
-  /** Is `old` an ancestor of HEAD? False on a force-pushed/rewritten
-    * history AND on an unknown object (gc'd old head) — both fall back
-    * to full extraction in [[extractRepoSince]]. */
-  private def isAncestor(path: Path, old: String): Boolean =
-    Try(Process(Seq("git", "merge-base", "--is-ancestor", old, "HEAD"),
-      path.toFile).!(ProcessLogger(_ => (), _ => ()))).toOption.contains(0)
-
-  /** Incremental variant of [[extractRepo]] — the since-snapshot ETL's
-    * per-repo extraction (the reference re-runs full history every
-    * time, analyzer.rs:301; a real deployment re-extracts daily and
-    * must touch only new commits). Given the repo's head recorded by
-    * the PREVIOUS run:
+    * `since` is the head a PREVIOUS run recorded (the incremental ETL's
+    * frontier; the reference re-runs full history every time,
+    * analyzer.rs:301). The walk taken is the repo event's `mode`:
     *
-    *  - no previous head (new repo)          → mode "full": whole history;
-    *  - previous head == current HEAD        → mode "noop": zero commits,
-    *    no `git log` subprocess at all;
-    *  - previous head is an ancestor of HEAD → mode "since": exactly
-    *    `git log old..HEAD` — cost proportional to NEW commits;
+    *  - no previous head (first run, new repo) → "full": whole history;
+    *  - previous head == HEAD                  → "noop": zero commits,
+    *    no history walk at all;
+    *  - previous head is an ancestor of HEAD   → "since": exactly
+    *    `old..HEAD` — cost proportional to NEW commits;
     *  - previous head missing / not an ancestor (force push, gc)
-    *                                         → mode "rewind": full
-    *    history again — the append path's anti-join against the
+    *                                           → "rewind": full history
+    *    again — the incremental append's anti-join against the
     *    already-committed (repository_id, commit_hash) set deduplicates
-    *    (GitEtlIncr), so a rewound repo is re-covered, never doubled.
+    *    ([[GitEtlIncr]]), so a rewound repo is re-covered, never doubled.
     *
-    * The kind="repo" event carries the CURRENT head (the next run's
-    * frontier) and the mode taken.
+    * `shard` of `shards` extracts only the commits whose hash falls in
+    * its slice — the giant-repo straggler mitigation: one huge history
+    * spreads over several tasks instead of serializing into one. The
+    * "repo" / "error" events come from shard 0 only (one dimension row
+    * per repo); every shard still validates (a rev-parse is cheap next
+    * to its extraction slice).
+    *
+    * The kind="repo" event carries the head walked to (the next run's
+    * frontier) and the mode. Commits stream token by token, so executor
+    * memory per repo is O(one commit), not O(history) — the reference
+    * holds the entire repo in a Vec (repository.rs:114,185), which
+    * SURVEY.md §4 flags as its OOM risk at scale.
     */
-  def extractRepoSince(path: Path, prevHead: Option[String]): Iterator[ExtractEvent] = {
+  def extractRepo(path: Path, since: Option[String] = None,
+                  shard: Int = 0, shards: Int = 1): Iterator[ExtractEvent] = {
     val name = path.getFileName.toString
-    validateRepo(path) match {
-      case Some(err) =>
-        Iterator.single(ExtractEvent("error", name, path.toString, null, err, null))
-      case None =>
-        val url = remoteUrl(path.toFile)
-        val head = headHash(path).orNull
-        val mode = prevHead match {
-          case None                               => "full"
-          case Some(old) if old == head           => "noop"
-          case Some(old) if isAncestor(path, old) => "since"
-          case Some(_)                            => "rewind"
+    val resolved =
+      if (!isRepo(path)) Left(s"not a git repository: $path")
+      else gitOutput(path, "rev-parse", "--verify", "HEAD").toOption.filter(_.nonEmpty)
+        .toRight(s"cannot resolve HEAD in $path")
+    resolved match {
+      case Left(err) =>
+        if (shard == 0) Iterator.single(ExtractEvent("error", name, path.toString, null, err, null))
+        else Iterator.empty
+      case Right(head) =>
+        val url = gitOutput(path, "config", "--get", "remote.origin.url").toOption
+          .filter(_.nonEmpty).getOrElse(NoRemoteUrl)
+          .replace("git@github.com:", "https://github.com/")
+        // `merge-base --is-ancestor` also fails on an unknown (gc'd) old head
+        val mode = since match {
+          case None                     => "full"
+          case Some(old) if old == head => "noop"
+          case Some(old) if gitOutput(path, "merge-base", "--is-ancestor", old, head).isSuccess => "since"
+          case Some(_)                  => "rewind"
         }
-        val repoEv = Iterator.single(
-          ExtractEvent("repo", name, path.toString, url, null, null, head, mode))
-        val commits = mode match {
-          case "noop"  => Iterator.empty[CommitRow]
-          case "since" => streamRepo(path, name, url, Seq(s"${prevHead.get}..HEAD"))
-          case _       => streamRepo(path, name, url)
-        }
-        repoEv ++ commits.map(c =>
-          ExtractEvent("commit", name, path.toString, url, null, c))
+        val repoEv =
+          if (shard == 0) Iterator.single(ExtractEvent("repo", name, path.toString, url, null, null, head, mode))
+          else Iterator.empty
+        val range = if (mode == "since") s"${since.get}..$head" else head
+        // `++` takes its operand by name: the walk starts once the repo event is consumed
+        repoEv ++ (if (mode == "noop") Iterator.empty
+          else parseTokens(commitTokens(path, range, shard, shards), name, path.toString, url)
+            .map(c => ExtractEvent("commit", name, path.toString, url, null, c)))
     }
   }
-
-  /** Sharded variant of [[extractRepo]] — the giant-repo straggler
-    * mitigation: shard `sh` of `shards` extracts only the commits whose
-    * hash falls in its slice, so one huge history spreads over several
-    * tasks instead of serializing into one. The "repo" / "error"
-    * events are emitted by shard 0 only (one dimension row per repo);
-    * every shard still validates (a rev-parse is cheap next to its
-    * extraction slice).
-    */
-  def extractRepoShard(path: Path, sh: Int, shards: Int): Iterator[ExtractEvent] =
-    if (shards <= 1) extractRepo(path)
-    else {
-      val name = path.getFileName.toString
-      validateRepo(path) match {
-        case Some(err) =>
-          if (sh == 0) Iterator.single(ExtractEvent("error", name, path.toString, null, err, null))
-          else Iterator.empty
-        case None =>
-          val url = remoteUrl(path.toFile)
-          val head =
-            if (sh == 0) Iterator.single(ExtractEvent("repo", name, path.toString, url, null, null))
-            else Iterator.empty
-          head ++ streamRepoShard(path, name, url, sh, shards).map(c =>
-            ExtractEvent("commit", name, path.toString, url, null, c))
-      }
-    }
 
   /** A commit's shard: uniform from its leading hash bits — no global
     * index pass needed, every shard streams the (cheap, diff-free)
@@ -314,121 +242,103 @@ object GitLogSource {
   private[etl] def shardOf(hash: String, shards: Int): Int =
     (java.lang.Long.parseLong(hash.substring(0, 8), 16) % shards).toInt
 
-  /** Pipe `git rev-list` (metadata-only walk) through a shard filter
-    * into `git log --stdin --no-walk=unsorted`, which diffs ONLY the
-    * fed commits — output bytes are the same -z grammar parseTokens
-    * already handles (verified against git 2.x).
+  /** The NUL-token stream of `range`'s non-merge commits in this shard.
+    * A sharded walk pipes `git rev-list` (metadata only) through the
+    * shard filter into `git log --stdin --no-walk=unsorted`, which diffs
+    * ONLY the fed commits — the output is the same -z grammar.
     */
-  private def streamRepoShard(
-      path: Path, name: String, url: String, sh: Int, shards: Int): Iterator[CommitRow] = {
-    val revPb = new java.lang.ProcessBuilder("git", "rev-list", "--no-merges", "HEAD")
-    revPb.directory(path.toFile)
-    revPb.redirectError(java.lang.ProcessBuilder.Redirect.DISCARD)
-    val revProc = revPb.start()
-    revProc.getOutputStream.close()
-    val revIn = new java.io.BufferedReader(
-      new java.io.InputStreamReader(revProc.getInputStream, UTF_8))
-
-    // Find the first owned hash BEFORE starting git log: `git log
-    // --stdin` with empty stdin falls back to HEAD (verified), so an
-    // empty shard must never launch the log process at all — it would
-    // re-emit the entire history.
-    var first: String = null
-    var line = revIn.readLine()
-    while (first == null && line != null) {
-      if (line.length >= 8 && shardOf(line, shards) == sh) first = line
-      else line = revIn.readLine()
+  private def commitTokens(path: Path, range: String, shard: Int, shards: Int): Iterator[String] =
+    if (shards <= 1) nulTokens(git(path, "log", LogArgs ++ Seq("--date-order", range, "--")))
+    else {
+      val revs = new BufferedReader(new InputStreamReader(
+        git(path, "rev-list", Seq("--no-merges", range, "--")), UTF_8))
+      val owned = Iterator.continually(revs.readLine()).takeWhile(_ != null)
+        .filter(h => h.length >= 8 && shardOf(h, shards) == shard).buffered
+      // `git log --stdin` with empty stdin falls back to HEAD (verified),
+      // so an empty shard must never launch the log process at all — it
+      // would re-emit the entire history
+      if (!owned.hasNext) Iterator.empty
+      else nulTokens(git(path, "log", LogArgs ++ Seq("--no-walk=unsorted", "--stdin"), owned))
     }
-    if (first == null) {
-      val rc = revProc.waitFor()
-      if (rc != 0) throw new RuntimeException(s"git rev-list exited with $rc in $path")
-      Iterator.empty
-    } else {
-      val logPb = new java.lang.ProcessBuilder(
-        (logCommand.filterNot(_ == "--date-order") ++ Seq("--no-walk=unsorted", "--stdin")): _*)
-      logPb.directory(path.toFile)
-      logPb.redirectError(java.lang.ProcessBuilder.Redirect.DISCARD)
-      val logProc = logPb.start()
 
-      // feeder: stream rev-list -> shard filter -> log stdin; a thread
-      // so both pipes flow without buffering the history anywhere. If
-      // git log dies mid-stream the writes hit EPIPE — swallow it (the
-      // exit-status check below raises the loud failure) but stop
-      // feeding.
-      val firstHash = first
-      val feeder = new Thread(() => {
-        val out = new java.io.BufferedWriter(
-          new java.io.OutputStreamWriter(logProc.getOutputStream, UTF_8))
-        try {
-          out.write(firstHash); out.write('\n')
-          var l = revIn.readLine()
-          while (l != null) {
-            if (l.length >= 8 && shardOf(l, shards) == sh) {
-              out.write(l); out.write('\n')
-            }
-            l = revIn.readLine()
-          }
-        } catch { case _: java.io.IOException => () } // EPIPE: log died
+  /** `git <cmd> <args>` run to completion; its trimmed stdout, or the
+    * failure [[git]] raises on a nonzero exit. */
+  private def gitOutput(dir: Path, cmd: String, args: String*): Try[String] =
+    Try(new String(git(dir, cmd, args).readAllBytes(), UTF_8).trim)
+
+  /** The one git subprocess runner: starts `git <cmd> <args>` in `dir`
+    * and returns its stdout.
+    *
+    *  - `stdin` lines are fed from a thread (none: stdin closes at once),
+    *    so a piped walk flows without buffering the history anywhere;
+    *  - stderr is drained concurrently (a chatty git would block on a
+    *    full pipe) into a bounded tail;
+    *  - at end of stdout a nonzero exit becomes a LOUD exception naming
+    *    git's stderr tail — raised from the consuming task instead of
+    *    silently truncating the repo's commits while the report lists
+    *    it as analyzed — and so does a failed `stdin` feed.
+    *
+    * `core.quotePath=false` keeps non-ASCII paths raw (with -z git never
+    * quotes, but the setting also covers the non -z commands), and
+    * submodules are ignored (`diff.ignoreSubmodules=all`,
+    * repository.rs:137).
+    */
+  private def git(dir: Path, cmd: String, args: Seq[String],
+                  stdin: Iterator[String] = Iterator.empty): InputStream = {
+    val proc = new ProcessBuilder((Seq("git", "-c", "diff.ignoreSubmodules=all",
+      "-c", "core.quotePath=false", cmd) ++ args): _*).directory(dir.toFile).start()
+    val tail = new StringBuilder
+    val drainer = daemon(s"git-$cmd-stderr") {
+      val r = new BufferedReader(new InputStreamReader(proc.getErrorStream, UTF_8))
+      Iterator.continually(r.readLine()).takeWhile(_ != null).foreach { l =>
+        tail.synchronized { if (tail.length < 4096) tail.append(l).append('\n') }
+      }
+    }
+    @volatile var feedFailure: Throwable = null
+    val feeder =
+      if (!stdin.hasNext) { proc.getOutputStream.close(); None }
+      else Some(daemon(s"git-$cmd-stdin") {
+        val out = new BufferedWriter(new OutputStreamWriter(proc.getOutputStream, UTF_8))
+        var open = true
+        // once git stops reading (it died mid-stream: EPIPE) keep draining
+        // the feed, so an upstream git never wedges on a pipe nobody reads;
+        // git's exit status carries that failure
+        try stdin.foreach { l =>
+          if (open) try { out.write(l); out.write('\n') }
+          catch { case _: IOException => open = false }
+        } catch { case e: Throwable => feedFailure = e } // e.g. upstream git failed
         finally Try(out.close())
-      }, s"git-shard-feeder-$name-$sh")
-      feeder.setDaemon(true)
-      feeder.start()
-
-      val tokens = nulTokens(new BufferedInputStream(logProc.getInputStream), onEof = () => {
-        // log's stdout hit EOF, so logProc is exiting — but rev-list
-        // may be wedged writing to a pipe nobody drains anymore (the
-        // feeder dies on EPIPE when log aborts mid-stream). A plain
-        // waitFor() would hang the task forever; bound it and kill.
-        val lc = logProc.waitFor()
-        val rc =
-          if (revProc.waitFor(10, java.util.concurrent.TimeUnit.SECONDS)) revProc.exitValue()
-          else { revProc.destroyForcibly(); -1 }
-        if (rc != 0 || lc != 0)
-          throw new RuntimeException(
-            s"sharded git extraction failed in $path (rev-list=$rc, log=$lc)")
       })
-      parseTokens(tokens, name, path.toString, url)
+    new FilterInputStream(new BufferedInputStream(proc.getInputStream)) {
+      private var checked = false
+      private def atEof(n: Int): Int = {
+        if (n < 0 && !checked) {
+          checked = true
+          val code = proc.waitFor()
+          drainer.join(); feeder.foreach(_.join())
+          if (code != 0) throw new RuntimeException(
+            s"git $cmd exited with $code in $dir: ${tail.synchronized(tail.toString).trim}")
+          if (feedFailure != null) throw new RuntimeException(
+            s"git $cmd input failed in $dir: ${feedFailure.getMessage}", feedFailure)
+        }
+        n
+      }
+      override def read(): Int = atEof(super.read())
+      override def read(b: Array[Byte], off: Int, len: Int): Int = atEof(super.read(b, off, len))
     }
   }
 
-  private def streamRepo(path: Path, name: String, url: String,
-                         range: Seq[String] = Nil): Iterator[CommitRow] = {
-    // `range` appends a rev range (e.g. "old..HEAD") to the shared log
-    // command — empty means the default HEAD walk
-    val pb = new java.lang.ProcessBuilder((logCommand ++ range): _*)
-    pb.directory(path.toFile)
-    val proc = pb.start()
-    proc.getOutputStream.close()
-    // stderr must be drained concurrently or a chatty git blocks on a
-    // full pipe; keep a bounded tail for the failure message
-    val stderrTail = new StringBuilder
-    val drainer = new Thread(() => {
-      val r = new java.io.BufferedReader(
-        new java.io.InputStreamReader(proc.getErrorStream, UTF_8))
-      var line = r.readLine()
-      while (line != null) {
-        stderrTail.synchronized {
-          if (stderrTail.length < 4096) stderrTail.append(line).append('\n')
-        }
-        line = r.readLine()
-      }
-    }, s"git-stderr-$name")
-    drainer.setDaemon(true)
-    drainer.start()
-    val tokens = nulTokens(new BufferedInputStream(proc.getInputStream), onEof = () => {
-      val code = proc.waitFor()
-      if (code != 0)
-        throw new RuntimeException(
-          s"git log exited with $code in $path: ${stderrTail.synchronized(stderrTail.toString).trim}")
-    })
-    parseTokens(tokens, name, path.toString, url)
+  private def daemon(name: String)(body: => Unit): Thread = {
+    val t = new Thread(() => body, name)
+    t.setDaemon(true)
+    t.start()
+    t
   }
 
   /** Lazy NUL-token reader over a raw byte stream. Tokens are UTF-8
     * decoded per token (paths/metadata may contain any byte but NUL).
-    * `onEof` runs once when the stream ends — the exit-status hook.
     */
-  private[etl] def nulTokens(in: InputStream, onEof: () => Unit = () => ()): Iterator[String] =
+  private[etl] def nulTokens(in: InputStream): Iterator[String] =
     new Iterator[String] {
       private val buf = new ByteArrayOutputStream(256)
       private var pending: String = null
@@ -440,7 +350,6 @@ object GitLogSource {
           if (b < 0) {
             done = true
             if (buf.size() > 0) pending = take()
-            onEof()
           } else if (b == 0) pending = take()
           else buf.write(b)
         }

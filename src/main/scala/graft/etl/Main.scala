@@ -83,7 +83,7 @@ object Main {
     if (incremental) {
       // since-snapshot mode: only new commits extract; tables are the
       // snapshot-versioned manifest-log layout (GitEtlIncr scaladoc)
-      val rep = GitEtlIncr.run(spark, root, out, config, maxDepth)
+      val rep = GitEtlIncr.run(spark, root, out, config, maxDepth, shards)
       val secs = (System.nanoTime() - t0) / 1e9
       val byMode = rep.modes.groupBy(_._2).view.mapValues(_.size).toMap
       println(f"# Done in $secs%.1f seconds (incremental -> logs version ${rep.logsVersion})")

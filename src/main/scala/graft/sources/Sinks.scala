@@ -271,25 +271,8 @@ object Sinks {
                     overwrite: Boolean = true): Long = {
     val versions = snapshotVersions(dir)
     val next = versions.lastOption.getOrElse(0L) + 1L
-    val dataDir = java.nio.file.Paths.get(dir, "data", s"v$next")
-    df.write.mode(SaveMode.ErrorIfExists).parquet(dataDir.toString)
-    val newFiles = {
-      val s = java.nio.file.Files.list(dataDir)
-      try s.iterator().asScala
-        .map(_.toAbsolutePath.toString)
-        .filter(_.endsWith(".parquet"))
-        .toSeq.sorted
-      finally s.close()
-    }
-    val carried =
-      if (overwrite || versions.isEmpty) Seq.empty
-      else java.nio.file.Files.readAllLines(
-        manifestDir(dir).resolve(s"v${versions.last}.manifest")).asScala.toSeq
-    java.nio.file.Files.createDirectories(manifestDir(dir))
-    val tmp = manifestDir(dir).resolve(s".v$next.manifest.tmp")
-    java.nio.file.Files.writeString(tmp, (carried ++ newFiles).mkString("\n"))
-    java.nio.file.Files.move(tmp, manifestDir(dir).resolve(s"v$next.manifest"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE) // the commit point
+    commitVersion(df, dir, next, SaveMode.ErrorIfExists,
+      carryFrom = if (overwrite) None else versions.lastOption)
     next
   }
 
@@ -312,8 +295,24 @@ object Sinks {
     val v = batchId + 1L
     val committed = snapshotVersions(dir)
     if (committed.contains(v)) return false // replayed batch: no-op
+    try {
+      commitVersion(df, dir, v, SaveMode.Overwrite,
+        carryFrom = Some(v - 1).filter(committed.contains))
+      true
+    } catch { // lost a commit race: the other writer's manifest stands
+      case _: java.nio.file.FileAlreadyExistsException => false
+    }
+  }
+
+  /** The one commit sequence both writers share: stage `df` under
+    * data/v<v>/, list the new files, prepend the files of version
+    * `carryFrom` (an append), and commit by moving the manifest into
+    * _manifests/ with ATOMIC_MOVE — the commit point.
+    */
+  private def commitVersion(df: DataFrame, dir: String, v: Long, mode: SaveMode,
+                            carryFrom: Option[Long]): Unit = {
     val dataDir = java.nio.file.Paths.get(dir, "data", s"v$v")
-    df.write.mode(SaveMode.Overwrite).parquet(dataDir.toString)
+    df.write.mode(mode).parquet(dataDir.toString)
     val newFiles = {
       val s = java.nio.file.Files.list(dataDir)
       try s.iterator().asScala
@@ -322,21 +321,14 @@ object Sinks {
         .toSeq.sorted
       finally s.close()
     }
-    val carried =
-      if (!committed.contains(v - 1)) Seq.empty
-      else java.nio.file.Files.readAllLines(
-        manifestDir(dir).resolve(s"v${v - 1}.manifest")).asScala.toSeq
+    val carried = carryFrom.toSeq.flatMap(c => java.nio.file.Files.readAllLines(
+      manifestDir(dir).resolve(s"v$c.manifest")).asScala)
     java.nio.file.Files.createDirectories(manifestDir(dir))
     val tmp = manifestDir(dir).resolve(s".v$v.manifest.tmp")
     java.nio.file.Files.writeString(tmp, (carried ++ newFiles).mkString("\n"))
-    try {
-      java.nio.file.Files.move(tmp, manifestDir(dir).resolve(s"v$v.manifest"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      true
-    } catch { // lost a commit race: the other writer's manifest stands
-      case _: java.nio.file.FileAlreadyExistsException =>
-        java.nio.file.Files.deleteIfExists(tmp); false
-    }
+    try java.nio.file.Files.move(tmp, manifestDir(dir).resolve(s"v$v.manifest"),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    catch { case e: java.io.IOException => java.nio.file.Files.deleteIfExists(tmp); throw e }
   }
 
   /** Read a committed version (default: latest) — time travel is

@@ -338,8 +338,8 @@ class GitEtlSpec extends AnyFunSuite {
     val (cands, _) = GitLogSource.scanDirectories(r, Int.MaxValue, Nil)
     val names = cands.map(_.getFileName.toString)
     assert(names.contains("wt"), s"worktree checkout not detected: $names")
-    assert(GitLogSource.validateRepo(group.resolve("wt")).isEmpty)
     val evs = GitLogSource.extractRepo(group.resolve("wt")).toVector
+    assert(evs.head.kind == "repo") // validates: no error event
     assert(evs.count(_.kind == "commit") == 1)
   }
 
@@ -367,12 +367,12 @@ class GitEtlSpec extends AnyFunSuite {
     assert(plain.size == 3000)
     val shards = 3
     val sharded = (0 until shards).flatMap(sh =>
-      GitLogSource.extractRepoShard(repo, sh, shards).filter(_.kind == "commit")
+      GitLogSource.extractRepo(repo, shard = sh, shards = shards).filter(_.kind == "commit")
         .map(_.commit.commit_hash)).toSet
     assert(sharded == plain, "sharded union must equal the full walk")
     // shard slices are disjoint by construction (hash-partitioned)
     val sizes = (0 until shards).map(sh =>
-      GitLogSource.extractRepoShard(repo, sh, shards).count(_.kind == "commit"))
+      GitLogSource.extractRepo(repo, shard = sh, shards = shards).count(_.kind == "commit"))
     assert(sizes.sum == 3000 && sizes.forall(_ > 0), sizes.toString)
   }
 
@@ -380,11 +380,74 @@ class GitEtlSpec extends AnyFunSuite {
     val repo1 = root.resolve("repo1")
     val evs = GitLogSource.extractRepo(repo1).toVector
     assert(evs.head.kind == "repo" && evs.head.repo_url == "(no remote url)")
+    assert(evs.head.mode == "full" && evs.head.head == git(repo1, "rev-parse", "HEAD").trim)
     assert(evs.tail.forall(_.kind == "commit"))
     assert(evs.count(_.kind == "commit") == 7) // C1..C7, merge excluded
     val bad = GitLogSource.extractRepo(root.resolve("data")).toVector
     assert(bad.map(_.kind) == Vector("error"))
     assert(bad.head.error.contains("not a git repository"))
+  }
+
+  test("a missing blob fails full, sharded and since extraction loudly, naming git's error") {
+    // rev-parse and rev-list only need commit objects, so the repo
+    // validates and a shard's rev-list succeeds; `git log --numstat`
+    // must read the blob and exits 128 — the failure must carry git's
+    // stderr, not just an exit code
+    val r = Files.createTempDirectory("etl-blob")
+    val repo = Files.createDirectory(r.resolve("broken"))
+    git(repo, "init", "-q", "-b", "main")
+    git(repo, "config", "user.email", "b@x.io")
+    git(repo, "config", "user.name", "B")
+    Files.writeString(repo.resolve("a.txt"), "one\n")
+    git(repo, "add", ".")
+    commit(repo, "B1", date = "2024-07-01T00:00:00Z")
+    val first = git(repo, "rev-parse", "HEAD").trim
+    Files.writeString(repo.resolve("b.txt"), "lost\n")
+    git(repo, "add", ".")
+    commit(repo, "B2", date = "2024-07-02T00:00:00Z")
+    val blob = git(repo, "rev-parse", "HEAD:b.txt").trim
+    Files.delete(repo.resolve(".git").resolve("objects").resolve(blob.take(2)).resolve(blob.drop(2)))
+    def failure(extract: => Unit): String = intercept[RuntimeException](extract).getMessage
+    val full = failure(GitLogSource.extractRepo(repo).foreach(_ => ()))
+    val sharded = failure((0 until 2).foreach(sh =>
+      GitLogSource.extractRepo(repo, shard = sh, shards = 2).foreach(_ => ())))
+    val since = failure(GitLogSource.extractRepo(repo, since = Some(first)).foreach(_ => ()))
+    Seq(full, sharded, since).foreach(m => assert(m.contains(s"unable to read $blob"), m))
+  }
+
+  test("report runs exactly one Spark job over the cached extraction") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val t = GitEtl.dataframes(spark, root, config, maxDepth = 1)
+    t("events").count() // the extraction itself is not the report's job
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case "etl-report"       => jobs.incrementAndGet()
+          case "etl-report-drain" => drained.countDown()
+          case _                  =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("etl-report", "report")
+      val rep = GitEtl.report(t)
+      // listener events arrive in order: once the marker job is seen,
+      // every report job has been counted
+      sc.setJobGroup("etl-report-drain", "drain")
+      spark.range(1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get == 1, s"report ran ${jobs.get} jobs")
+      assert(rep == report)
+      assert(rep.modes.values.toSet == Set("full") && rep.commitsPerRepo == Seq("repo1" -> 7L, "repo2" -> 2L))
+      assert(rep.nLogs == 9 && rep.nChangedFiles == t("changed_files").count())
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+      t("events").unpersist()
+    }
   }
 
   test("config TOML-subset parser") {

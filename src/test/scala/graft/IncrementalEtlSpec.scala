@@ -153,6 +153,28 @@ class IncrementalEtlSpec extends AnyFunSuite {
     assert(heads.keySet == Set("mrepo", "zrepo", "arepo"))
     heads.values.foreach(h => assert(h != null && h.length == 40))
     assert(heads("mrepo") ==
-      GitLogSource.headHash(root.resolve("mrepo")).get)
+      GitLogSource.extractRepo(root.resolve("mrepo")).next().head)
+  }
+
+  test("a shards = 3 refresh commits the same logs and changed_files as an unsharded one") {
+    val root = Files.createTempDirectory("incr-shards")
+    val plainDir = Files.createTempDirectory("incr-plain-tables").toString
+    val shardedDir = Files.createTempDirectory("incr-sharded-tables").toString
+    val repo = initRepo(root, "big")
+    (1 to 4).foreach(i => addCommit(repo, s"f$i.txt", s"$i\n", s"B$i", f"2024-04-$i%02dT00:00:00Z"))
+    val other = initRepo(root, "small")
+    addCommit(other, "s.txt", "s\n", "S1", "2024-04-05T00:00:00Z")
+    GitEtlIncr.run(spark, root, plainDir)
+    GitEtlIncr.run(spark, root, shardedDir, shardsPerRepo = 3)
+
+    (5 to 12).foreach(i => addCommit(repo, s"f${i % 3}.txt", s"$i\n", s"B$i", f"2024-04-$i%02dT00:00:00Z"))
+    val plain = GitEtlIncr.run(spark, root, plainDir)
+    val sharded = GitEtlIncr.run(spark, root, shardedDir, shardsPerRepo = 3)
+    assert(sharded.modes == plain.modes && plain.modes.values.toSet == Set("since", "noop"))
+    assert(plain.batchLogs == 8 && sharded.batchLogs == 8 && sharded.batchFiles == plain.batchFiles)
+    assert(logsKey(Sinks.readSnapshot(spark, s"$shardedDir/logs")) ==
+      logsKey(Sinks.readSnapshot(spark, s"$plainDir/logs")))
+    assert(filesKey(Sinks.readSnapshot(spark, s"$shardedDir/changed_files")) ==
+      filesKey(Sinks.readSnapshot(spark, s"$plainDir/changed_files")))
   }
 }
